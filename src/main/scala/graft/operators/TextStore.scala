@@ -217,9 +217,10 @@ object TextStore {
 
   /** Search the chunk store with a RAW TEXT query — the reference's
     * /search contract (text in, ranked hits out) through the pruned
-    * index: featurize the query with the shared expressions, probe the
-    * nprobe nearest centroid partitions, exact cosine top-k over the
-    * pruned rows. */
+    * index, either layout: featurize the query with the shared
+    * expressions, probe the store's `nprobe` partitions (nearest
+    * centroids, or the multi-probe buckets within Hamming radius
+    * `nprobe`), exact cosine top-k over the pruned rows. */
   def searchByText(
       spark: SparkSession,
       path: String,
@@ -229,22 +230,6 @@ object TextStore {
       filter: Option[Column] = None): DataFrame =
     VectorIndex.searchStore(spark, path,
         featurizeText(spark, queryText), k, nprobe, filter)
-      .select(
-        expr(s"vec_id div $ChunkMod").as("doc_id"),
-        expr(s"vec_id % $ChunkMod").as("chunk_id"),
-        col("score"))
-
-  /** [[searchByText]] against the LSH-layout chunk store: same raw-text
-    * contract, multi-probe bucket pruning instead of centroid pruning. */
-  def searchByTextLsh(
-      spark: SparkSession,
-      path: String,
-      queryText: String,
-      k: Int = 10,
-      probeHamming: Int = 2,
-      filter: Option[Column] = None): DataFrame =
-    VectorIndex.searchLshStore(spark, path,
-        featurizeText(spark, queryText), k, probeHamming, filter)
       .select(
         expr(s"vec_id div $ChunkMod").as("doc_id"),
         expr(s"vec_id % $ChunkMod").as("chunk_id"),
@@ -278,7 +263,7 @@ object TextStore {
   /** `add_texts(texts, metadatas)` — the reference store's ingestion
     * call: raw (doc_id, text, lang) rows are chunked + featurized by the
     * shared transform and upserted as ONE delta generation through the
-    * layout-shared CRUD surface. Nothing already written moves; a
+    * layout-shared CRUD surface, into either layout. Nothing already written moves; a
     * [[searchByText]] issued after this call sees the new chunks (spec:
     * TextStoreSpec pins top-rank retrieval of freshly added texts on
     * both layouts). */
@@ -293,12 +278,6 @@ object TextStore {
       spark: SparkSession, path: String, texts: DataFrame, gen: Long,
       owner: String): Unit =
     VectorIndex.appendStoreAs(spark, path, chunkVectors(texts), gen, owner)
-
-  /** LSH-layout twin of [[addTexts]] — same transform, same delta
-    * contract, bucket-partitioned store. */
-  def addTextsLsh(
-      spark: SparkSession, path: String, texts: DataFrame, gen: Long): Unit =
-    VectorIndex.appendLshStore(spark, path, chunkVectors(texts), gen)
 
   // ---- the pluggable external-embedder seam ---------------------------
 

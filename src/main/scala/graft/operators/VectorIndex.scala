@@ -703,10 +703,10 @@ object VectorIndex {
     * pushed-down `gen = ?` probe over the delta's parquet row-group
     * stats (the delta is small by contract); a delta-less store answers
     * false. Tombstone rows (`deleted = true`, written by
-    * [[deleteFromStore]]/[[deleteFromLshStore]] at a caller-chosen gen
-    * into the same delta) are EXCLUDED from the receipt: a delete that
-    * happened to reuse a stream's gen value must not make the stream
-    * silently drop a batch that never committed. Gen collisions with
+    * [[deleteFromStore]] at a caller-chosen gen into the same delta) are
+    * EXCLUDED from the receipt: a delete that happened to reuse a
+    * stream's gen value must not make the stream silently drop a batch
+    * that never committed. Gen collisions with
     * OTHER append writers are the caller's responsibility — derive the
     * stream's startGen from [[nextGen]] and keep the store single-writer
     * while a stream runs (the receipt identifies a batch by its gen
@@ -781,13 +781,20 @@ object VectorIndex {
   // One CRUD implementation, two physical layouts. `partCol` is the
   // partition column of the written store; `modelDir` holds the model
   // side-table (centroids / hyperplanes) that drives both assignment at
-  // write time and probe selection at query time.
+  // write time and probe selection at query time. The layout is chosen
+  // once, by the build entry point; every later call reads it back from
+  // the model dir ([[layoutOf]]).
   private final case class StoreLayout(
       partCol: String,
       modelDir: String,
       modelIdCol: String,
       modelVecCol: String,
       assign: (Array[Array[Float]], Column) => Column,
+      // the probe set of a query: (model, query vector, probe width) →
+      // partition ids. The width is the public `nprobe` — nearest
+      // centroids for IVF, the Hamming radius of the multi-probe budget
+      // for LSH.
+      probe: (Array[Array[Float]], Array[Float], Int) => Seq[Int],
       // Directory granularity: 2^grpShift logical partitions share one
       // physical directory (0 = one dir per partition id). The LSH layout
       // has 2^nPlanes = 256 buckets — one dir each costs ~256 parquet
@@ -821,11 +828,25 @@ object VectorIndex {
 
   private val IvfLayout = StoreLayout(
     "centroid_id", "centroids", "centroid_id", "centroid",
-    (c, e) => IndexFunctions.nearestCentroid(e, c).getField("centroid_id"))
+    (c, e) => IndexFunctions.nearestCentroid(e, c).getField("centroid_id"),
+    nearestCentroidIds)
   private val LshLayout = StoreLayout(
     "bucket", "planes", "plane_id", "plane",
     (p, e) => IndexFunctions.hyperplaneLsh(e, p),
+    multiProbeBuckets,
     grpShift = 4)
+  private val Layouts = Seq(IvfLayout, LshLayout)
+
+  /** The layout of the store at `path`, read from the model dir its build
+    * wrote: `centroids/` is IVF, `planes/` is LSH. A warm store answers
+    * from [[modelCache]] with no filesystem or Spark work. */
+  private def layoutOf(spark: SparkSession, path: String): StoreLayout =
+    Layouts.find(l => modelCache.containsKey(s"$path/${l.modelDir}"))
+      .orElse(Layouts.find(l => fs(spark).exists(
+        new org.apache.hadoop.fs.Path(s"$path/${l.modelDir}"))))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no vector store at $path: it has neither a centroids/ nor a " +
+          "planes/ model dir"))
 
   // Serving model state (centroids / planes) cached per store path: probe
   // selection must not pay a parquet-read Spark job per query. Writers and
@@ -920,6 +941,13 @@ object VectorIndex {
       pqCb.fold(base)(cb => base.withColumn("codes", pqCodesCol(cb))),
       layout, s"$path/vectors")
     writeModelTable(spark, s"$path/${layout.modelDir}", layout, model)
+    // a path holds ONE layout: [[layoutOf]] reads it from the model dir,
+    // so another layout's model left by an earlier build here must go
+    for (other <- Layouts if other != layout) {
+      fs(spark).delete(
+        new org.apache.hadoop.fs.Path(s"$path/${other.modelDir}"), true)
+      modelCache.remove(s"$path/${other.modelDir}")
+    }
     graft.Tables.invalidatePath(s"$path/vectors")
     modelCache.put(s"$path/${layout.modelDir}", model)
     pqCb.foreach(cb => writePqModelTable(spark, path, cb))
@@ -1001,8 +1029,8 @@ object VectorIndex {
     * id to its highest generation across base + delta; compaction folds
     * everything back to a read-optimal single-gen partitioned layout. */
   private def appendAt(
-      spark: SparkSession, path: String, layout: StoreLayout,
-      batch: DataFrame, gen: Long): Unit = {
+      spark: SparkSession, path: String, batch: DataFrame, gen: Long): Unit = {
+    val layout = layoutOf(spark, path)
     val model = readModel(spark, path, layout)
     // STICKY placement for existing ids: an update lands in the partition
     // its previous versions live in, so a pruned read that sees any copy
@@ -1047,9 +1075,9 @@ object VectorIndex {
       .write.mode("append").parquet(deltaPath(path))
   }
 
-  /** Incremental upsert into the IVF store. `batch` must have columns
-    * (vec_id, label, embedding) and optionally metadata. Takes the
-    * writer lease for the call. */
+  /** Incremental upsert into the store at `path`, either layout. `batch`
+    * must have columns (vec_id, label, embedding) and optionally
+    * metadata. Takes the writer lease for the call. */
   def appendStore(
       spark: SparkSession, path: String, batch: DataFrame, gen: Long): Unit =
     appendStoreAs(spark, path, batch, gen, newWriterOwner("append"))
@@ -1061,19 +1089,7 @@ object VectorIndex {
       spark: SparkSession, path: String, batch: DataFrame, gen: Long,
       owner: String): Unit =
     withWriterLease(spark, path, owner) {
-      appendAt(spark, path, IvfLayout, batch, gen)
-    }
-
-  /** Incremental upsert into the LSH store — same contract. */
-  def appendLshStore(
-      spark: SparkSession, path: String, batch: DataFrame, gen: Long): Unit =
-    appendLshStoreAs(spark, path, batch, gen, newWriterOwner("append"))
-
-  private[graft] def appendLshStoreAs(
-      spark: SparkSession, path: String, batch: DataFrame, gen: Long,
-      owner: String): Unit =
-    withWriterLease(spark, path, owner) {
-      appendAt(spark, path, LshLayout, batch, gen)
+      appendAt(spark, path, batch, gen)
     }
 
   /** Shared tombstone delete (the reference store's `delete(ids)`
@@ -1085,8 +1101,8 @@ object VectorIndex {
     * found with a pushed-down `vec_id IN (...)` scan; nothing is
     * rewritten until compaction. */
   private def deleteAt(
-      spark: SparkSession, path: String, layout: StoreLayout,
-      ids: Seq[Long], gen: Long): Unit = {
+      spark: SparkSession, path: String, ids: Seq[Long], gen: Long): Unit = {
+    val layout = layoutOf(spark, path)
     // flag cleared before the write commits — same crash-safety order as
     // appendAt
     setSingleGen(spark, path, v = false)
@@ -1107,13 +1123,7 @@ object VectorIndex {
   def deleteFromStore(
       spark: SparkSession, path: String, ids: Seq[Long], gen: Long): Unit =
     withWriterLease(spark, path, newWriterOwner("delete")) {
-      deleteAt(spark, path, IvfLayout, ids, gen)
-    }
-
-  def deleteFromLshStore(
-      spark: SparkSession, path: String, ids: Seq[Long], gen: Long): Unit =
-    withWriterLease(spark, path, newWriterOwner("delete")) {
-      deleteAt(spark, path, LshLayout, ids, gen)
+      deleteAt(spark, path, ids, gen)
     }
 
   /** The generation fold shared by compaction: latest version of every id,
@@ -1131,8 +1141,9 @@ object VectorIndex {
       .where(!col("v.deleted"))
 
   /** Fold all generations down to the latest version of every id and
-    * rewrite the IVF store as gen 0 — the maintenance pass that restores
-    * dedup-free reads after a run of appends/deletes.
+    * rewrite the store as gen 0 — the maintenance pass that restores
+    * dedup-free reads after a run of appends/deletes. Updated embeddings
+    * move to their current partition; the model itself is kept.
     *
     * With `retrain = true` the centroid matrix itself is re-trained
     * (k-means|| over the surviving live vectors) before the rewrite — the
@@ -1146,7 +1157,9 @@ object VectorIndex {
     * them: codebook fit is the second drift-decay mechanism — frozen
     * codebooks on a turned-over corpus degrade ADC ranking silently —
     * and the re-fit stages (`pq_retrain`) and swaps through the same
-    * crash-safe machinery. */
+    * crash-safe machinery. Retrain is IVF-only: an LSH store's
+    * hyperplanes are data-independent, so `retrain = true` on one is
+    * rejected. */
   def compactStore(
       spark: SparkSession, path: String, retrain: Boolean = false): Unit =
     withWriterLease(spark, path, newWriterOwner("compact")) {
@@ -1156,7 +1169,11 @@ object VectorIndex {
   private def compactBody(
       spark: SparkSession, path: String, retrain: Boolean): Unit = {
     recoverBody(spark, path) // clear any debris from an interrupted swap
-    val live = liveRows(spark, path, IvfLayout)
+    val layout = layoutOf(spark, path)
+    require(!retrain || layout == IvfLayout,
+      s"compactStore(retrain = true): $path is an LSH store, whose " +
+        "hyperplanes are data-independent — there is nothing to retrain")
+    val live = liveRows(spark, path, layout)
     if (retrain) {
       // the resolved frame feeds both the trainer and the rewrite: cache
       // it so the k-means iterations don't re-fold the generations per
@@ -1204,20 +1221,9 @@ object VectorIndex {
       rewriteAndSwap(spark, path, IvfLayout, live, c, stagedModel = true,
         stagedPq = pqRetrained)
     } else
-      rewriteAndSwap(spark, path, IvfLayout, live,
-        readModel(spark, path, IvfLayout), stagedModel = false)
+      rewriteAndSwap(spark, path, layout, live,
+        readModel(spark, path, layout), stagedModel = false)
   }
-
-  /** Compaction for the LSH store: fold generations, re-assign updated
-    * embeddings to their current sign bucket, keep the plane matrix (the
-    * hyperplanes are data-independent, so there is nothing to retrain). */
-  def compactLshStore(spark: SparkSession, path: String): Unit =
-    withWriterLease(spark, path, newWriterOwner("compact")) {
-      recoverBody(spark, path)
-      val live = liveRows(spark, path, LshLayout)
-      rewriteAndSwap(spark, path, LshLayout, live,
-        readModel(spark, path, LshLayout), stagedModel = false)
-    }
 
   /** The compaction rewrite + crash-safe swap (VERDICT r3 item 5): the old
     * layout is renamed aside (`vectors_old`), never deleted before the new
@@ -1332,7 +1338,7 @@ object VectorIndex {
       if (!f.rename(P(src), P(dst)))
         throw new java.io.IOException(
           s"store recovery: rename $path/$src -> $path/$dst failed")
-    val modelDirs = Seq(IvfLayout.modelDir, LshLayout.modelDir)
+    val modelDirs = Layouts.map(_.modelDir)
     if (ex("vectors_old")) {
       if (!ex("vectors") && ex("vectors_compact"))
         renameOrFail("vectors_compact", "vectors")
@@ -1405,11 +1411,17 @@ object VectorIndex {
     * The metadata `filter` applies AFTER resolution so a superseded
     * generation can never satisfy the predicate on stale attributes; on
     * the single-gen path there is nothing stale and Catalyst pushes it
-    * into the pruned scan. */
+    * into the pruned scan. `cols` is the payload kept next to `vec_id`
+    * (default: label, metadata, the partition column and the embedding);
+    * the filter may reference only those. The IVF-PQ phase-1 scans pass
+    * their codes projection, so they never read the embedding. */
   private def resolvedPartitions(
       spark: SparkSession, path: String, layout: StoreLayout,
       parts: Seq[Int], filter: Option[Column],
-      asOfGen: Option[Long] = None): DataFrame = {
+      asOfGen: Option[Long] = None,
+      cols: Option[Seq[String]] = None): DataFrame = {
+    val keep =
+      cols.getOrElse(Seq("label", "metadata", layout.partCol, "embedding"))
     // base: directory-pruned scan. Delta: the same predicate as a row
     // filter over the (small-by-contract) delta files — the partition id
     // rides as a data column there, so a probe sees exactly the delta
@@ -1434,44 +1446,40 @@ object VectorIndex {
     val pruned = asOfGen.fold(prunedAll)(g => prunedAll.where(col("gen") <= g))
     val resolved =
       if (asOfGen.isEmpty && isSingleGen(spark, path))
-        pruned.where(!col("deleted"))
-          .select(col("vec_id"), col("label"), col("metadata"),
-            col(layout.partCol), col("embedding"))
+        pruned.where(!col("deleted")).select(("vec_id" +: keep).map(col): _*)
       else
         pruned
           .groupBy(col("vec_id"))
-          .agg(max_by(
-            struct(col("label"), col("embedding"), col("metadata"),
-              col(layout.partCol), col("deleted")),
+          .agg(max_by(struct((keep :+ "deleted").map(col): _*),
             // tie-break: same generation prefers the live row to a tombstone
             struct(col("gen"), !col("deleted"))).as("v"))
           .where(!col("v.deleted"))
-          .select(col("vec_id"), col("v.label").as("label"),
-            col("v.metadata").as("metadata"),
-            col(s"v.${layout.partCol}").as(layout.partCol),
-            col("v.embedding").as("embedding"))
+          .select(col("vec_id") +: keep.map(c => col(s"v.$c").as(c)): _*)
     resolved.where(filter.getOrElse(lit(true)))
   }
 
-  /** The IVF probe frame: nearest-`nprobe`-centroid partition pruning
-    * (probe ids computed on the driver from the cached model state) +
-    * shared generation resolution. */
+  /** The probe frame of one query: the layout's probe set (computed on
+    * the driver from the cached model state) + shared generation
+    * resolution. */
   private def resolvedProbe(
       spark: SparkSession,
       path: String,
+      layout: StoreLayout,
       queryVec: Array[Float],
       nprobe: Int,
       filter: Option[Column],
-      asOfGen: Option[Long] = None): DataFrame = {
-    val centroids = readModel(spark, path, IvfLayout)
-    resolvedPartitions(spark, path, IvfLayout,
-      nearestCentroidIds(centroids, queryVec, nprobe), filter, asOfGen)
-  }
+      asOfGen: Option[Long] = None): DataFrame =
+    resolvedPartitions(spark, path, layout,
+      layout.probe(readModel(spark, path, layout), queryVec, nprobe),
+      filter, asOfGen)
 
-  /** Search a materialized IVF store. The `centroid_id IN (...)` predicate
-    * is a partition filter on the written layout: Spark's file index prunes
-    * the non-probed directories before any IO — the scan reads nprobe/k of
-    * the data, which is the point of the index. Ids touched by
+  /** Search a materialized store, either layout. The probe set — the
+    * `nprobe` nearest centroids (IVF) or the flip-cost multi-probe
+    * neighborhood within Hamming radius `nprobe` of the query signature
+    * (LSH) — is a partition filter on the written layout: Spark's file
+    * index prunes the non-probed directories before any IO, which is the
+    * point of the index. The output carries the layout's partition column
+    * (`centroid_id` or `bucket`). Ids touched by
     * [[appendStore]] resolve to their highest generation before scoring —
     * a shuffle of only the pruned subset, skipped outright on a fresh or
     * compacted store (single-gen manifest) and eliminated again by
@@ -1491,10 +1499,12 @@ object VectorIndex {
       strategy: KnnSearch.Strategy = KnnSearch.Cosine,
       scoreThreshold: Option[Double] = None,
       asOfGen: Option[Long] = None): DataFrame = {
-    val scored = resolvedProbe(spark, path, queryVec, nprobe, filter, asOfGen)
-      .select(col("vec_id"), col("label"), col("centroid_id"),
-        round(strategy.score(col("embedding"), typedLit(queryVec)), 4)
-          .as("score"))
+    val layout = layoutOf(spark, path)
+    val scored =
+      resolvedProbe(spark, path, layout, queryVec, nprobe, filter, asOfGen)
+        .select(col("vec_id"), col("label"), col(layout.partCol),
+          round(strategy.score(col("embedding"), typedLit(queryVec)), 4)
+            .as("score"))
     val thresholded = scoreThreshold.fold(scored) { t =>
       if (strategy.descending) scored.where(col("score") >= t)
       else scored.where(col("score") <= t)
@@ -1569,11 +1579,35 @@ object VectorIndex {
           .as("norm"))
   }
 
-  /** Max-marginal-relevance search over the materialized store: the
-    * fetchK candidate fetch is the pruned store probe (same plan as
-    * [[searchStore]], embeddings retained), the greedy λ-diversity
-    * re-rank is the shared driver-side step from [[KnnSearch.mmrTopK]] —
-    * candidate sets are query parameters by then, not data. */
+  /** The graded corpus search through a materialized store (either
+    * layout — pass [[ensureStore]] or [[ensureLshStore]]): the query is
+    * corpus row `queryVecId`, excluded from the hits, so the plan prunes
+    * IO instead of scoring the full corpus (same contract as the inline
+    * [[ivfSearch]] / [[lshSearch]]). `filter` composes metadata
+    * predicates into the pruned probe; `scoreThreshold` switches to the
+    * reference's score-threshold mode (all probed hits ≥ threshold, no
+    * k) — a hit outside the probed partitions is not returned. */
+  def corpusSearchStore(
+      spark: SparkSession,
+      sfDir: String,
+      path: String,
+      k: Int = 10,
+      nprobe: Int = 4,
+      queryVecId: Long = 0L,
+      filter: Option[Column] = None,
+      scoreThreshold: Option[Double] = None): DataFrame = {
+    val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
+    val excl = col("vec_id") =!= queryVecId
+    searchStore(spark, path, qv, k, nprobe,
+      Some(filter.fold(excl)(_ && excl)), scoreThreshold = scoreThreshold)
+  }
+
+  /** Max-marginal-relevance search over the materialized store, either
+    * layout: the fetchK candidate fetch is the pruned store probe (same
+    * probe set as [[searchStore]], embeddings retained), the greedy
+    * λ-diversity re-rank is the shared driver-side step from
+    * [[KnnSearch.mmrTopK]] — candidate sets are query parameters by then,
+    * not data, so the collect is bounded by fetchK by construction. */
   def mmrSearchStore(
       spark: SparkSession,
       path: String,
@@ -1583,7 +1617,8 @@ object VectorIndex {
       lambdaMult: Double = 0.5,
       nprobe: Int = 4,
       filter: Option[Column] = None): DataFrame = {
-    val cand = resolvedProbe(spark, path, queryVec, nprobe, filter)
+    val cand = resolvedProbe(spark, path, layoutOf(spark, path), queryVec,
+        nprobe, filter)
       .select(col("vec_id"), col("label"), col("embedding"),
         round(graft.functions.VectorFunctions.cosineSim(
           col("embedding"), typedLit(queryVec)), 4).as("score"))
@@ -1595,83 +1630,65 @@ object VectorIndex {
     KnnSearch.mmrRerank(spark, cand, k, lambdaMult)
   }
 
-  /** The graded IVF search path: build (or reuse) the materialized
-    * partitioned store and search through it, so the executed plan prunes
-    * IO at the file index instead of scoring the centroid assignment over
-    * the full corpus. Same contract as the inline [[ivfSearch]] (query row
-    * excluded). */
-  def ivfSearchStore(
+  /** [[mmrSearchStore]] for the graded corpus query (the reference's
+    * `max_marginal_relevance_search` retriever mode composed with
+    * `index_enabled`, either layout): query = corpus row `queryVecId`,
+    * excluded from the candidates. */
+  def corpusMmrStore(
       spark: SparkSession,
       sfDir: String,
+      path: String,
       k: Int = 10,
+      fetchK: Int = 50,
+      lambdaMult: Double = 0.5,
       nprobe: Int = 4,
-      queryVecId: Long = 0L,
-      filter: Option[Column] = None): DataFrame = {
-    val path = ensureStore(spark, sfDir)
-    val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
-    val excl = col("vec_id") =!= queryVecId
-    searchStore(spark, path, qv, k, nprobe,
-      Some(filter.fold(excl)(_ && excl)))
-  }
+      queryVecId: Long = 0L): DataFrame =
+    mmrSearchStore(spark, path, KnnSearch.queryVector(spark, sfDir, queryVecId),
+      k, fetchK, lambdaMult, nprobe, Some(col("vec_id") =!= queryVecId))
 
-  /** Score-threshold search through the materialized store (the reference's
-    * `score_threshold` mode composed with `index_enabled`): pruned probe,
-    * all hits ≥ threshold, no k. */
-  def ivfThresholdStore(
-      spark: SparkSession,
-      sfDir: String,
-      threshold: Double = 0.2,
-      nprobe: Int = 4,
-      queryVecId: Long = 0L): DataFrame = {
-    val path = ensureStore(spark, sfDir)
-    val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
-    searchStore(spark, path, qv, nprobe = nprobe,
-      filter = Some(col("vec_id") =!= queryVecId),
-      scoreThreshold = Some(threshold))
-  }
-
-  /** Batch kNN THROUGH the index — `knn_batch` composed with
-    * `index_enabled`: every query's nprobe partitions prune in ONE shared
-    * scan (the partition filter is the union of all probe sets — still
-    * file-index pruning), each pruned row joins only the queries that
-    * probe its partition via a broadcast (query_id, centroid, query_vec)
-    * probe table (nQueries·nprobe rows — query parameters, not data),
-    * and the per-query top-k is the TopKAgg partial aggregate. At 100 TB:
-    * queries ≪ corpus ride the task closure, the corpus is scanned once
-    * at union-probe IO, and the post-scoring shuffle carries k rows per
-    * query. */
-  def batchIvfSearchStore(
-      spark: SparkSession,
-      sfDir: String,
-      nQueries: Int = 5,
-      k: Int = 5,
-      nprobe: Int = 4): DataFrame = {
+  /** Every query's probe set over ONE shared scan, scored: the scan is
+    * pruned at the union of all probe sets (still file-index pruning),
+    * and each pruned row joins only the queries that probe its partition
+    * via a broadcast (query_id, partition, query_vec) probe table
+    * (queries·probes rows — query parameters, not data). Returns
+    * (query_id, vec_id, score) for the per-query top-k to fold. */
+  private def batchProbeScores(
+      spark: SparkSession, path: String, layout: StoreLayout,
+      queries: Seq[(Long, Array[Float])], nprobe: Int,
+      filter: Option[Column]): DataFrame = {
     import spark.implicits._
-    val path = ensureStore(spark, sfDir)
-    val centroids = readModel(spark, path, IvfLayout)
-    val queries = KnnSearch.queryVectors(spark, sfDir, nQueries)
+    val model = readModel(spark, path, layout)
     val probePairs = queries.flatMap { case (qid, qv) =>
-      nearestCentroidIds(centroids, qv, nprobe)
-        .map(cid => (qid, cid, qv.toSeq))
-    }.toSeq
-    val allProbes = probePairs.map(_._2).distinct
-    val probeDf = probePairs.toDF("query_id", "p_cid", "query_vec")
-    val scored = resolvedPartitions(spark, path, IvfLayout, allProbes,
-      Some(col("vec_id") >= nQueries))
-      .join(broadcast(probeDf), col("centroid_id") === col("p_cid"))
+      layout.probe(model, qv, nprobe).map(p => (qid, p, qv.toSeq))
+    }
+    val probeDf = probePairs.toDF("query_id", "p_part", "query_vec")
+    resolvedPartitions(spark, path, layout, probePairs.map(_._2).distinct,
+      filter)
+      .join(broadcast(probeDf), col(layout.partCol) === col("p_part"))
       .select(col("query_id"), col("vec_id"),
         round(graft.functions.VectorFunctions.cosineSim(
           col("embedding"), col("query_vec")), 4).as("score"))
-    KnnSearch.perQueryTopK(scored, k)
-      .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Retrieval-quality evaluation as a first-class query: recall@k of the
-    * pruned batch probe ([[batchIvfSearchStore]]) against the exact batch
-    * scan over the same query set — the measurement loop a production
-    * store runs continuously (is the index still good enough?), expressed
-    * as one summary row. Everything downstream of the two k·nQueries-row
-    * results is bounded arithmetic. */
+  /** Batch kNN THROUGH the index, either layout — `knn_batch` composed
+    * with `index_enabled`: the corpus rows `0 until nQueries` are the
+    * queries (and excluded as candidates), [[batchProbeScores]] scans the
+    * store once at union-probe IO, and the per-query top-k is the TopKAgg
+    * partial aggregate — k rows per query cross the wire, the corpus
+    * never shuffles. */
+  def batchSearchStore(
+      spark: SparkSession,
+      sfDir: String,
+      path: String,
+      nQueries: Int = 5,
+      k: Int = 5,
+      nprobe: Int = 4): DataFrame =
+    KnnSearch.perQueryTopK(
+      batchProbeScores(spark, path, layoutOf(spark, path),
+        KnnSearch.queryVectors(spark, sfDir, nQueries).toSeq, nprobe,
+        Some(col("vec_id") >= nQueries)),
+      k).orderBy(col("query_id"), col("rank"))
+
   /** The recall@k summary shared by every index family's eval query:
     * per-query overlap of the approximate top-k with the exact top-k
     * (a query with ZERO overlap still contributes 0 to the mean — the
@@ -1701,114 +1718,26 @@ object VectorIndex {
       TextAnalysis.round4(min(col("recall"))).as("min_recall"))
   }
 
+  /** Retrieval-quality evaluation as a first-class query: recall@k of an
+    * index family's batch probe — `approx`, a (query_id, vec_id) frame
+    * over the corpus rows `0 until nQueries` as queries, e.g.
+    * [[batchSearchStore]] (IVF or LSH), [[batchPqSearch]] or
+    * [[batchIvfPqSearchStore]] — against the exact batch scan over the
+    * same query set, as one summary row. The measurement loop a
+    * production store runs continuously (is the index still good
+    * enough?): IVF loses recall through pruning, PQ through quantization
+    * error (codebook fit), IVF-PQ through both, and LSH bucket balance
+    * degrades silently under drift. */
   def annEval(
       spark: SparkSession,
       sfDir: String,
+      approx: DataFrame,
       nQueries: Int = 5,
-      k: Int = 5,
-      nprobe: Int = 4): DataFrame =
+      k: Int = 5): DataFrame =
     recallSummary(
       KnnSearch.batchTopK(spark, sfDir, nQueries, k)
         .select(col("query_id"), col("vec_id")),
-      batchIvfSearchStore(spark, sfDir, nQueries, k, nprobe)
-        .select(col("query_id"), col("vec_id")),
-      k)
-
-  /** Batch kNN THROUGH the LSH index — [[batchIvfSearchStore]]'s contract
-    * on the bucket-partitioned layout: each query's margin-aware
-    * multi-probe set is computed driver-side from the cached plane
-    * matrix, the store is scanned ONCE pruned at the union of all probe
-    * sets, each pruned row joins only the queries probing its bucket via
-    * a broadcast (query_id, bucket, query_vec) probe table, and the
-    * per-query top-k is the TopKAgg partial aggregate — k rows per query
-    * cross the wire, the corpus never shuffles. */
-  def batchLshSearchStore(
-      spark: SparkSession,
-      sfDir: String,
-      nQueries: Int = 5,
-      k: Int = 5,
-      probeHamming: Int = 2): DataFrame = {
-    import spark.implicits._
-    val path = ensureLshStore(spark, sfDir)
-    val planes = readModel(spark, path, LshLayout)
-    val queries = KnnSearch.queryVectors(spark, sfDir, nQueries)
-    val probePairs = queries.flatMap { case (qid, qv) =>
-      multiProbeBuckets(planes, qv, probeHamming)
-        .map(b => (qid, b, qv.toSeq))
-    }.toSeq
-    val allProbes = probePairs.map(_._2).distinct
-    val probeDf = probePairs.toDF("query_id", "p_b", "query_vec")
-    val scored = resolvedPartitions(spark, path, LshLayout, allProbes,
-      Some(col("vec_id") >= nQueries))
-      .join(broadcast(probeDf), col("bucket") === col("p_b"))
-      .select(col("query_id"), col("vec_id"),
-        round(graft.functions.VectorFunctions.cosineSim(
-          col("embedding"), col("query_vec")), 4).as("score"))
-    KnnSearch.perQueryTopK(scored, k)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Index-health eval for the LSH family — [[annEval]]'s measurement on
-    * the bucket-partitioned store: recall@k of the multi-probe batch
-    * probe vs the exact batch scan, one summary row. The LSH probe is
-    * approximate by design (the hamming-budget/recall trade-off
-    * AnnRecallSpec documents), so the continuous health check matters
-    * MORE here than for IVF: a drifting corpus degrades bucket balance
-    * silently, and this query is what catches it. */
-  def annEvalLsh(
-      spark: SparkSession,
-      sfDir: String,
-      nQueries: Int = 5,
-      k: Int = 5,
-      probeHamming: Int = 2): DataFrame =
-    recallSummary(
-      KnnSearch.batchTopK(spark, sfDir, nQueries, k)
-        .select(col("query_id"), col("vec_id")),
-      batchLshSearchStore(spark, sfDir, nQueries, k, probeHamming)
-        .select(col("query_id"), col("vec_id")),
-      k)
-
-  /** Index-health eval for the PQ family — [[annEval]]'s measurement for
-    * the third index kind: recall@k of the ADC-ranked batch probe
-    * ([[batchPqSearch]]) vs the exact batch scan. PQ loses recall through
-    * quantization error rather than through pruning (every vector IS
-    * scanned, as 8 codes), so this query tracks codebook fit: a corpus
-    * drifting away from the trained centroids degrades ADC ranking
-    * silently until re-training, and this is the check that catches it. */
-  def annEvalPq(
-      spark: SparkSession,
-      sfDir: String,
-      nQueries: Int = 5,
-      k: Int = 5,
-      fetchK: Int = 100): DataFrame =
-    recallSummary(
-      KnnSearch.batchTopK(spark, sfDir, nQueries, k)
-        .select(col("query_id"), col("vec_id")),
-      batchPqSearch(spark, sfDir, nQueries, k, fetchK)
-        .select(col("query_id"), col("vec_id")),
-      k)
-
-  /** Index-health eval for the COMPOSED IVF-PQ family (r14, completing
-    * the eval surface across all four index configurations): recall@k of
-    * the partition-pruned, ADC-ranked, exactly-re-ranked batch probe
-    * ([[batchIvfPqSearchStore]]) vs the exact batch scan. IVF-PQ loses
-    * recall through BOTH mechanisms the single-family evals isolate —
-    * coarse pruning (a true neighbor in an unprobed partition) and
-    * quantization error (ADC mis-ranking inside the fetchK window) — so
-    * its health check is the one that tracks the production
-    * configuration most deployments actually run. */
-  def annEvalIvfPq(
-      spark: SparkSession,
-      sfDir: String,
-      nQueries: Int = 5,
-      k: Int = 5,
-      nprobe: Int = 4,
-      fetchK: Int = 50): DataFrame =
-    recallSummary(
-      KnnSearch.batchTopK(spark, sfDir, nQueries, k)
-        .select(col("query_id"), col("vec_id")),
-      batchIvfPqSearchStore(spark, sfDir, nQueries, k, nprobe, fetchK)
-        .select(col("query_id"), col("vec_id")),
+      approx.select(col("query_id"), col("vec_id")),
       k)
 
   /** Store-health report (r18, VERDICT r17 item 6) — the consumer the
@@ -1949,17 +1878,8 @@ object VectorIndex {
         (qids.length.toLong, round4(recalls.sum / recalls.length),
           round4(recalls.min))
       }
-      val probePairs = queries.toSeq.flatMap { case (qid, qv) =>
-        nearestCentroidIds(centroids, qv, nprobe).map(p => (qid, p, qv.toSeq))
-      }
-      val probeDf = probePairs.toDF("query_id", "p_c", "query_vec")
       val approx = KnnSearch.perQueryTopK(
-        resolvedPartitions(spark, path, IvfLayout,
-          probePairs.map(_._2).distinct, None)
-          .join(broadcast(probeDf), col("centroid_id") === col("p_c"))
-          .select(col("query_id"), col("vec_id"),
-            round(graft.functions.VectorFunctions.cosineSim(
-              col("embedding"), col("query_vec")), 4).as("score")),
+        batchProbeScores(spark, path, IvfLayout, queries.toSeq, nprobe, None),
         k).select(col("query_id"), col("vec_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       val (nQ, meanRecall, minRecall) = summarize(approx)
@@ -2027,58 +1947,22 @@ object VectorIndex {
         "LSH store) — rebuild with writeStore or use searchStore")
     val cb = readPqModel(spark, path)
     val adc = adcColumn(cb, qv)
-    val centroids = readModel(spark, path, IvfLayout)
-    val probes = nearestCentroidIds(centroids, qv, nprobe)
-    val baseAll = readBase(spark, path)
-    val prunedBase = baseAll.where(col("centroid_id").isin(probes: _*))
-    val pruned =
-      if (hasDelta(spark, path))
-        prunedBase.unionByName(
-          deltaFrame(spark, path, baseAll.schema)
-            .where(col("centroid_id").isin(probes: _*)))
-      else prunedBase
+    val probes = nearestCentroidIds(readModel(spark, path, IvfLayout), qv, nprobe)
+    val excl = excludeId.map(id => col("vec_id") =!= id)
     // phase 1 over the codes projection only — the embedding column is
     // never read here (spec-pinned via ReadSchema)
-    val phase1 =
-      if (isSingleGen(spark, path))
-        pruned.where(!col("deleted"))
-          .select(col("vec_id"), col("codes"))
-      else
-        pruned
-          .groupBy(col("vec_id"))
-          .agg(max_by(struct(col("codes"), col("deleted")),
-            struct(col("gen"), !col("deleted"))).as("v"))
-          .where(!col("v.deleted"))
-          .select(col("vec_id"), col("v.codes").as("codes"))
-    val excl = excludeId.map(id => col("vec_id") =!= id)
-    val cand = phase1
-      .where(excl.getOrElse(lit(true)))
+    val cand = resolvedPartitions(spark, path, IvfLayout, probes, excl,
+        cols = Some(Seq("codes")))
       .select(col("vec_id"), adc.as("adc"))
       .orderBy(col("adc").desc, col("vec_id"))
       .limit(fetchK)
-    resolvedProbe(spark, path, qv, nprobe, excl)
+    resolvedPartitions(spark, path, IvfLayout, probes, excl)
       .join(broadcast(cand), "vec_id")
       .select(col("vec_id"), col("label"), col("adc"),
         round(graft.functions.VectorFunctions.cosineSim(
           col("embedding"), typedLit(qv)), 4).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
       .limit(k)
-  }
-
-  /** MMR search through the materialized store (the reference's
-    * `max_marginal_relevance_search` retriever mode composed with
-    * `index_enabled`): pruned fetchK probe + shared greedy re-rank. */
-  def ivfMmrStore(
-      spark: SparkSession,
-      sfDir: String,
-      k: Int = 10,
-      fetchK: Int = 50,
-      nprobe: Int = 4,
-      queryVecId: Long = 0L): DataFrame = {
-    val path = ensureStore(spark, sfDir)
-    val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
-    mmrSearchStore(spark, path, qv, k, fetchK,
-      filter = Some(col("vec_id") =!= queryVecId), nprobe = nprobe)
   }
 
   /** Margin-aware multi-probe bucket selection (multi-probe LSH, Lv et
@@ -2093,7 +1977,9 @@ object VectorIndex {
     * pins the floor and documents the budget/recall curve). The
     * budget is sized to the hamming-≤`probeHamming` ball, so the
     * parameter keeps its IO meaning — probeHamming = nPlanes still
-    * probes every bucket (the exact-scan full probe of the specs). */
+    * probes every bucket (the exact-scan full probe of the specs). This
+    * is the LSH layout's probe set: a store search's `nprobe` is
+    * `probeHamming` here. */
   private def multiProbeBuckets(
       planes: Array[Array[Float]],
       queryVec: Array[Float],
@@ -2122,107 +2008,6 @@ object VectorIndex {
       .sortBy { case (b, c) => (c, b) }
       .take(budget)
       .map(_._1)
-  }
-
-  /** Search a materialized LSH store: the probe set — the flip-cost-
-    * ordered multi-probe neighborhood of the query signature, budgeted to
-    * the ≤`probeHamming` hamming ball — is computed driver-side from the
-    * cached plane matrix, and `bucket IN (...)` prunes at the file index —
-    * only the probed directories are read. Shares the generation
-    * resolution and metadata filtering of the IVF store probe. */
-  def searchLshStore(
-      spark: SparkSession,
-      path: String,
-      queryVec: Array[Float],
-      k: Int = 10,
-      probeHamming: Int = 2,
-      filter: Option[Column] = None,
-      scoreThreshold: Option[Double] = None): DataFrame = {
-    val planes = readModel(spark, path, LshLayout)
-    val probed = multiProbeBuckets(planes, queryVec, probeHamming)
-    val scored = resolvedPartitions(spark, path, LshLayout, probed, filter)
-      .select(col("vec_id"), col("label"), col("bucket"),
-        round(VectorFunctions.cosineSim(col("embedding"), typedLit(queryVec)), 4)
-          .as("score"))
-    // threshold mode (the reference's score_threshold composed with the
-    // LSH layout): all probed hits ≥ threshold, no k — same contract
-    // switch as [[searchStore]]'s
-    val thresholded = scoreThreshold.fold(scored)(t =>
-      scored.where(col("score") >= t))
-    val ordered = thresholded.orderBy(col("score").desc, col("vec_id"))
-    if (scoreThreshold.isDefined) ordered else ordered.limit(k)
-  }
-
-  /** Score-threshold search through the materialized LSH store — the
-    * bucket-layout twin of [[ivfThresholdStore]] (r14, layout symmetry):
-    * flip-cost multi-probe pruned read, all hits ≥ threshold, no k. The
-    * recall contract is the probe's, exactly like `knn_threshold_ivf`'s
-    * is its probed partitions': a hit outside the probed buckets is not
-    * returned — the spec pins full-probe equality with the exact
-    * threshold scan. */
-  def lshThresholdStore(
-      spark: SparkSession,
-      sfDir: String,
-      threshold: Double = 0.2,
-      probeHamming: Int = 2,
-      queryVecId: Long = 0L): DataFrame = {
-    val path = ensureLshStore(spark, sfDir)
-    val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
-    searchLshStore(spark, path, qv, probeHamming = probeHamming,
-      filter = Some(col("vec_id") =!= queryVecId),
-      scoreThreshold = Some(threshold))
-  }
-
-  /** The graded LSH search path: multi-probe search through the
-    * materialized bucket-partitioned store (same probes and contract as
-    * the inline [[lshSearch]], query row excluded — the plan prunes IO
-    * instead of bucketing the full corpus per query). `filter` composes
-    * metadata predicates into the pruned probe, same as the IVF path. */
-  def lshSearchStore(
-      spark: SparkSession,
-      sfDir: String,
-      k: Int = 10,
-      queryVecId: Long = 0L,
-      probeHamming: Int = 2,
-      filter: Option[Column] = None): DataFrame = {
-    val path = ensureLshStore(spark, sfDir)
-    val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
-    val excl = col("vec_id") =!= queryVecId
-    searchLshStore(spark, path, qv, k, probeHamming,
-      Some(filter.fold(excl)(_ && excl)))
-  }
-
-  /** MMR search through the materialized LSH store — the retriever's
-    * `max_marginal_relevance_search` mode on the bucket layout, closing
-    * the IVF/LSH symmetry gap ([[ivfMmrStore]] is the centroid-layout
-    * twin): the fetchK candidate fetch is the flip-cost multi-probe
-    * pruned store read (same probe set as [[searchLshStore]], embeddings
-    * retained), the greedy λ-diversity re-rank is the shared driver-side
-    * [[KnnSearch.mmrRerank]] — by then candidates are query parameters,
-    * not data, so the collect is bounded by fetchK by construction. */
-  def lshMmrStore(
-      spark: SparkSession,
-      sfDir: String,
-      k: Int = 10,
-      fetchK: Int = 50,
-      lambdaMult: Double = 0.5,
-      probeHamming: Int = 2,
-      queryVecId: Long = 0L): DataFrame = {
-    val path = ensureLshStore(spark, sfDir)
-    val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
-    val planes = readModel(spark, path, LshLayout)
-    val probed = multiProbeBuckets(planes, qv, probeHamming)
-    val cand = resolvedPartitions(spark, path, LshLayout, probed,
-      Some(col("vec_id") =!= queryVecId))
-      .select(col("vec_id"), col("label"), col("embedding"),
-        round(VectorFunctions.cosineSim(col("embedding"), typedLit(qv)), 4)
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(fetchK)
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1),
-        r.getSeq[Float](2).toArray.map(_.toDouble), r.getDouble(3)))
-    KnnSearch.mmrRerank(spark, cand, k, lambdaMult)
   }
 
   /** LSH-probed ANN search: compute the query's 16-bit signature on the
@@ -2461,7 +2246,7 @@ object VectorIndex {
       .limit(k)
   }
 
-  /** Batch kNN through the PQ codes — [[batchIvfSearchStore]]'s contract
+  /** Batch kNN through the PQ codes — [[batchSearchStore]]'s contract
     * for the third index family, completing the batch surface (IVF and
     * LSH have it; a production reranker sends queries in batches to every
     * index kind). ONE codes scan serves every query: each query's integer
@@ -2536,7 +2321,7 @@ object VectorIndex {
     * answers queries, not the raw table; langchain_ydb's indexed search
     * path). Phase 1 scans ONLY the probed partitions — file-index pruning
     * at the union of every query's nprobe set, like
-    * [[batchIvfSearchStore]] — and ONLY the (vec_id, centroid_id, codes)
+    * [[batchSearchStore]] — and ONLY the (vec_id, centroid_id, codes)
     * projection: the 8-byte code column written at build time and
     * maintained by every CRUD path, never the 256-byte embedding
     * (spec-pinned via ReadSchema). At 100 TB that is the partition cut ×
@@ -2577,7 +2362,7 @@ object VectorIndex {
     import graft.functions.TopKAgg.topkAgg
     require(hasPqModel(spark, path),
       s"store at $path has no PQ codes (built before PQ support, or an " +
-        "LSH store) — rebuild with writeStore or use batchIvfSearchStore")
+        "LSH store) — rebuild with writeStore or use batchSearchStore")
     val cb = readPqModel(spark, path)
     val centroids = readModel(spark, path, IvfLayout)
     // flat per-query LUT (lut[sub * width + code]), same shape as
@@ -2601,36 +2386,15 @@ object VectorIndex {
     }.toSeq
     val allProbes = probePairs.map(_._2).distinct
     val probeDf = probePairs.toDF("query_id", "p_cid", "lut")
-    // phase 1: pruned scan of the codes projection — the embedding column
-    // is never read here (ReadSchema pin in PqSpec). Delta rows prune on
-    // the partition id as a data column, same as resolvedPartitions.
-    val baseAll = readBase(spark, path)
-    val prunedBase = baseAll.where(IvfLayout.prunePred(allProbes))
-    val pruned =
-      if (hasDelta(spark, path))
-        prunedBase.unionByName(
-          deltaFrame(spark, path, baseAll.schema)
-            .where(col("centroid_id").isin(allProbes: _*)))
-      else prunedBase
-    val phase1 =
-      if (isSingleGen(spark, path))
-        pruned.where(!col("deleted"))
-          .select(col("vec_id"), col("centroid_id"), col("codes"))
-      else
-        pruned
-          .groupBy(col("vec_id"))
-          .agg(max_by(
-            struct(col("codes"), col("centroid_id"), col("deleted")),
-            struct(col("gen"), !col("deleted"))).as("v"))
-          .where(!col("v.deleted"))
-          .select(col("vec_id"), col("v.centroid_id").as("centroid_id"),
-            col("v.codes").as("codes"))
     val adc = (0 until PqM).map(s =>
       element_at(col("lut"),
         lit(s * width) + element_at(col("codes"), lit(s + 1)) + lit(1)))
       .reduce(_ + _)
-    val cand = phase1
-      .where(excludeBelow.fold(lit(true))(b => col("vec_id") >= b))
+    val excl = excludeBelow.map(b => col("vec_id") >= b)
+    // phase 1: pruned scan of the codes projection — the embedding column
+    // is never read here (ReadSchema pin in PqSpec)
+    val cand = resolvedPartitions(spark, path, IvfLayout, allProbes, excl,
+        cols = Some(Seq("centroid_id", "codes")))
       .join(broadcast(probeDf), col("centroid_id") === col("p_cid"))
       .select(col("query_id"), col("vec_id"), adc.as("adc"))
       .groupBy(col("query_id"))
@@ -2642,8 +2406,7 @@ object VectorIndex {
     // — of the pruned subset, joined down to fetchK rows per query)
     val qvDf = queries.map { case (qid, qv) => (qid, qv.toSeq) }
       .toSeq.toDF("query_id", "query_vec")
-    val scored = resolvedPartitions(spark, path, IvfLayout, allProbes,
-      excludeBelow.map(b => col("vec_id") >= b))
+    val scored = resolvedPartitions(spark, path, IvfLayout, allProbes, excl)
       .join(broadcast(cand), "vec_id")
       .join(broadcast(qvDf), "query_id")
       .select(col("query_id"), col("vec_id"),

@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-/** Streaming ingest into the materialized IVF store — the live
-  * `add_texts` path: each micro-batch of new/updated vectors is upserted
-  * through [[VectorIndex.appendStore]] as its own generation.
+/** Streaming ingest into a materialized store of either layout — the
+  * live `add_texts` path: each micro-batch of new/updated vectors is
+  * upserted through [[VectorIndex.appendStore]] as its own generation.
   *
   * `foreachBatch` (not a direct file sink) is deliberate: a parquet file
   * sink would write a `_spark_metadata` log that SHADOWS the store's
@@ -66,7 +66,7 @@ object StoreStream {
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   /** The shared stream-start protocol for every leased ingest path
-    * (StoreStream.ingest/ingestLsh/ingestTexts, CorpusStream
+    * (StoreStream.ingest/ingestTexts, CorpusStream
     * .ingestPipeline): atomically reserve the owner slot (two concurrent
     * same-session starts on one checkpoint must not BOTH pass the
     * duplicate check — the loser would re-stamp the live winner's lease
@@ -331,21 +331,22 @@ object StoreStream {
       dir: String,
       storePath: String,
       checkpointDir: String,
-      startGen: Long = AutoGen): StreamingQuery =
-    ingestWith(spark, dir, storePath, startGen, checkpointDir,
-      owner => VectorIndex.appendStoreAs(_, storePath, _, _, owner))
-
-  /** Same live `add_texts` path into the bucket-partitioned LSH store —
-    * the store CRUD surface is layout-independent (one shared append
-    * implementation), so the streaming ingest is too. */
-  def ingestLsh(
-      spark: SparkSession,
-      dir: String,
-      storePath: String,
-      checkpointDir: String,
-      startGen: Long = AutoGen): StreamingQuery =
-    ingestWith(spark, dir, storePath, startGen, checkpointDir,
-      owner => VectorIndex.appendLshStoreAs(_, storePath, _, _, owner))
+      startGen: Long = AutoGen): StreamingQuery = {
+    val owner = streamOwner(checkpointDir)
+    startLeasedIngest(spark, storePath, checkpointDir, startGen) { base =>
+      spark.readStream
+        .schema(vecSchema)
+        .json(dir)
+        .writeStream
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          ingestVecBatch(batch.sparkSession, storePath, batch,
+            base + batchId,
+            VectorIndex.appendStoreAs(_, storePath, _, _, owner))
+        }
+        .start()
+    }
+  }
 
   val textSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -375,29 +376,6 @@ object StoreStream {
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           ingestTextBatch(batch.sparkSession, storePath, batch,
             base + batchId, owner)
-        }
-        .start()
-    }
-  }
-
-  private def ingestWith(
-      spark: SparkSession,
-      dir: String,
-      storePath: String,
-      startGen: Long,
-      checkpointDir: String,
-      appendAs: String => (SparkSession, DataFrame, Long) => Unit)
-      : StreamingQuery = {
-    val append = appendAs(streamOwner(checkpointDir))
-    startLeasedIngest(spark, storePath, checkpointDir, startGen) { base =>
-      spark.readStream
-        .schema(vecSchema)
-        .json(dir)
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ingestVecBatch(batch.sparkSession, storePath, batch,
-            base + batchId, append)
         }
         .start()
     }

@@ -53,34 +53,30 @@ object LifecycleBench {
         r
       }
 
-      def run(
-          tag: String,
-          write: String => Unit,
-          append: (String, DataFrame, Long) => Unit,
-          delete: (String, Seq[Long], Long) => Unit,
-          compact: String => Unit,
-          search: String => Unit): String = {
+      // the layouts differ only in their build; every later call reads
+      // the layout from the store
+      def run(tag: String, write: String => Unit, nprobe: Int): String = {
         val path = java.nio.file.Files
           .createTempDirectory(s"graft_lc_${tag}_").toString
+        def search(): Unit =
+          noop(VectorIndex.searchStore(spark, path, qv, k = 10, nprobe = nprobe))
         timed(s"${tag}_build")(write(path))
-        timed(s"${tag}_search_fresh")(search(path))
+        timed(s"${tag}_search_fresh")(search())
         for (g <- 1 to 3)
-          timed(s"${tag}_append_g$g")(append(path, batch(1000000L * g), g.toLong))
-        timed(s"${tag}_search_merged")(search(path))
-        timed(s"${tag}_delete")(delete(path, (1000001L to 1000050L).toSeq, 4L))
-        timed(s"${tag}_search_tombstoned")(search(path))
-        timed(s"${tag}_compact")(compact(path))
-        timed(s"${tag}_search_compacted")(search(path))
+          timed(s"${tag}_append_g$g")(VectorIndex.appendStore(spark, path,
+            batch(1000000L * g), g.toLong))
+        timed(s"${tag}_search_merged")(search())
+        timed(s"${tag}_delete")(VectorIndex.deleteFromStore(spark, path,
+          (1000001L to 1000050L).toSeq, 4L))
+        timed(s"${tag}_search_tombstoned")(search())
+        timed(s"${tag}_compact")(VectorIndex.compactStore(spark, path))
+        timed(s"${tag}_search_compacted")(search())
         path
       }
 
       def ivfBlock(): Unit = {
-        val ivfPath = run("ivf",
-          p => VectorIndex.writeStore(spark, sfDir, p),
-          (p, b, g) => VectorIndex.appendStore(spark, p, b, g),
-          (p, ids, g) => VectorIndex.deleteFromStore(spark, p, ids, g),
-          p => VectorIndex.compactStore(spark, p),
-          p => noop(VectorIndex.searchStore(spark, p, qv, k = 10, nprobe = 4)))
+        val ivfPath = run("ivf", VectorIndex.writeStore(spark, sfDir, _),
+          nprobe = 4)
         // the ADC path against the same compacted store (codes column
         // maintained through the append/delete/compact cycle above)
         timed("ivf_pq_search_compacted")(
@@ -99,16 +95,8 @@ object LifecycleBench {
           noop(VectorIndex.searchStore(spark, ivfPath, qv, k = 10, nprobe = 4)))
       }
 
-      def lshBlock(): Unit = {
-        run("lsh",
-          p => VectorIndex.writeLshStore(spark, sfDir, p),
-          (p, b, g) => VectorIndex.appendLshStore(spark, p, b, g),
-          (p, ids, g) => VectorIndex.deleteFromLshStore(spark, p, ids, g),
-          p => VectorIndex.compactLshStore(spark, p),
-          p => noop(VectorIndex.searchLshStore(spark, p, qv, k = 10,
-            probeHamming = 2)))
-        ()
-      }
+      def lshBlock(): Unit =
+        run("lsh", VectorIndex.writeLshStore(spark, sfDir, _), nprobe = 2): Unit
 
       if (reverseLayouts) { lshBlock(); ivfBlock() }
       else { ivfBlock(); lshBlock() }

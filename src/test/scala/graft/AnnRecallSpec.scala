@@ -31,14 +31,16 @@ class AnnRecallSpec extends SparkSpec {
   }
 
   test("ivf store probe at graded nprobe=4 holds recall@10 >= 0.9") {
-    val r = recallAt10(VectorIndex.ivfSearchStore(spark, sfDir)
+    val r = recallAt10(VectorIndex.corpusSearchStore(spark, sfDir,
+      VectorIndex.ensureStore(spark, sfDir))
       .collect().map(_.getLong(0)).toSeq)
     info(f"ivf_search recall@10 = $r%.2f (nprobe=4 of ${VectorIndex.K})")
     assert(r >= 0.9, s"ivf recall regressed: $r")
   }
 
   test("lsh store probe at graded probeHamming=2 holds recall@10 >= 0.7") {
-    val r = recallAt10(VectorIndex.lshSearchStore(spark, sfDir)
+    val r = recallAt10(VectorIndex.corpusSearchStore(spark, sfDir,
+      VectorIndex.ensureLshStore(spark, sfDir), nprobe = 2)
       .collect().map(_.getLong(0)).toSeq)
     info(f"lsh_search recall@10 = $r%.2f (multi-probe, budget of hamming<=2 of 8 planes)")
     assert(r >= 0.7, s"lsh recall regressed: $r")
@@ -54,7 +56,8 @@ class AnnRecallSpec extends SparkSpec {
   test("batch PQ eval holds its mean-recall floor (codebook-fit check)") {
     // deterministic by construction (fixed-point training, exact integer
     // ADC): 1.0/1.0 on this corpus, floored with headroom like the others
-    val row = VectorIndex.annEvalPq(spark, sfDir).collect().head
+    val row = VectorIndex.annEval(spark, sfDir,
+      VectorIndex.batchPqSearch(spark, sfDir)).collect().head
     val (mean, min) = (row.getDouble(2), row.getDouble(3))
     info(f"ann_eval_pq mean=$mean%.2f min=$min%.2f @ sf0.001")
     assert(mean >= 0.9, s"pq batch mean recall regressed: $mean")

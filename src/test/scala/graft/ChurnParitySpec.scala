@@ -16,59 +16,53 @@ import org.apache.spark.sql.functions._
   * BranchVerify remains the oracle-grade harness. */
 class ChurnParitySpec extends SparkSpec {
 
-  private def ivfReads(path: String): Seq[Any] = {
+  /** The same read set on either layout (the store path determines it);
+    * `nprobe` is the layout's graded probe width, and the IVF store also
+    * serves the IVF-PQ read. */
+  private def reads(path: String, nprobe: Int, ivfPq: Boolean): Seq[Any] = {
     val qv = KnnSearch.queryVector(spark, sfDir, 0L)
     Seq(
-      VectorIndex.searchStore(spark, path, qv, k = 10, nprobe = 4,
+      VectorIndex.searchStore(spark, path, qv, k = 10, nprobe = nprobe,
         filter = Some(col("vec_id") =!= 0L))
         .collect().map(r => (r.getLong(0), r.getDouble(3))).toSeq,
       // getByIds carries no ordering contract: compare as a sorted set
       VectorIndex.getByIds(spark, path, Seq(3L, 7L, 11L))
         .collect().map(r => (r.getLong(0), r.get(1), r.get(2)))
-        .sortBy(_._1).toSeq,
-      VectorIndex.ivfPqSearchStoreAt(spark, path, qv, k = 10, nprobe = 4,
-        excludeId = Some(0L))
-        .collect().map(r => (r.getLong(0), r.getDouble(3))).toSeq)
-  }
-
-  private def lshReads(path: String): Seq[Any] = {
-    val qv = KnnSearch.queryVector(spark, sfDir, 0L)
-    Seq(
-      VectorIndex.searchLshStore(spark, path, qv, k = 10,
-        filter = Some(col("vec_id") =!= 0L))
-        .collect().map(r => (r.getLong(0), r.getDouble(3))).toSeq,
-      VectorIndex.getByIds(spark, path, Seq(3L, 7L, 11L))
-        .collect().map(r => (r.getLong(0), r.get(1), r.get(2)))
-        .sortBy(_._1).toSeq)
+        .sortBy(_._1).toSeq) ++
+      (if (ivfPq)
+        Seq(VectorIndex.ivfPqSearchStoreAt(spark, path, qv, k = 10,
+          nprobe = nprobe, excludeId = Some(0L))
+          .collect().map(r => (r.getLong(0), r.getDouble(3))).toSeq)
+      else Nil)
   }
 
   test("content-preserving churn leaves every IVF store read identical") {
     val path = Files.createTempDirectory("churn_ivf").toString
     VectorIndex.writeStore(spark, sfDir, path)
-    val before = ivfReads(path)
-    val gens = BranchVerify.churn(spark, path, isLsh = false)
+    val before = reads(path, nprobe = 4, ivfPq = true)
+    val gens = BranchVerify.churn(spark, path)
     assert(gens >= 2, "churn must write at least one generation pair")
     assert(!VectorIndex.isSingleGen(spark, path),
       "churn must force the multi-gen resolution branch")
-    assert(ivfReads(path) == before,
+    assert(reads(path, nprobe = 4, ivfPq = true) == before,
       "churned store reads diverged from the un-churned store")
     // and compaction folds it back to the same answers on the fast path
     VectorIndex.compactStore(spark, path)
     assert(VectorIndex.isSingleGen(spark, path))
-    assert(ivfReads(path) == before)
+    assert(reads(path, nprobe = 4, ivfPq = true) == before)
   }
 
   test("content-preserving churn leaves every LSH store read identical") {
     val path = Files.createTempDirectory("churn_lsh").toString
     VectorIndex.writeLshStore(spark, sfDir, path)
-    val before = lshReads(path)
-    val gens = BranchVerify.churn(spark, path, isLsh = true)
+    val before = reads(path, nprobe = 2, ivfPq = false)
+    val gens = BranchVerify.churn(spark, path)
     assert(gens >= 2)
     assert(!VectorIndex.isSingleGen(spark, path))
-    assert(lshReads(path) == before,
+    assert(reads(path, nprobe = 2, ivfPq = false) == before,
       "churned LSH store reads diverged from the un-churned store")
-    VectorIndex.compactLshStore(spark, path)
+    VectorIndex.compactStore(spark, path)
     assert(VectorIndex.isSingleGen(spark, path))
-    assert(lshReads(path) == before)
+    assert(reads(path, nprobe = 2, ivfPq = false) == before)
   }
 }

@@ -61,7 +61,8 @@ class PqSpec extends SparkSpec {
       "the ADC scan must not read the embedding column")
     // and it agrees with the full-replay contract: top-10 ids are a
     // subset of the probed exact ranking at the same nprobe
-    val ivf = VectorIndex.ivfSearchStore(spark, sfDir, k = 50)
+    val ivf = VectorIndex.corpusSearchStore(spark, sfDir,
+        VectorIndex.ensureStore(spark, sfDir), k = 50)
       .collect().map(_.getLong(0)).toSet
     assert(res.collect().map(_.getLong(0)).forall(ivf.contains))
   }
@@ -142,15 +143,17 @@ class PqSpec extends SparkSpec {
   }
 
   test("annEvalIvfPq's summary equals the hand-joined recall of its two inputs") {
+    // the IVF-PQ family of the single annEval
     val exact = graft.operators.KnnSearch.batchTopK(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
-    val approx = VectorIndex.batchIvfPqSearchStore(spark, sfDir)
+    val probe = VectorIndex.batchIvfPqSearchStore(spark, sfDir)
+    val approx = probe
       .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
     val recalls = exact.map { case (q, es) =>
       val a = approx.getOrElse(q, Array.empty).map(_._2).toSet
       es.count(e => a.contains(e._2)).toDouble / 5.0
     }.toSeq
-    val r = VectorIndex.annEvalIvfPq(spark, sfDir).collect().head
+    val r = VectorIndex.annEval(spark, sfDir, probe).collect().head
     assert(r.getLong(0) == recalls.size)
     assert(math.abs(r.getDouble(2) - recalls.sum / recalls.size) < 1e-9)
     assert(math.abs(r.getDouble(3) - recalls.min) < 1e-9)

@@ -256,7 +256,8 @@ class StoreSearchSpec extends SparkSpec {
 
   test("batch store probe equals per-query store probes; one scan, broadcast probe table") {
     import org.apache.spark.sql.functions.col
-    val batch = VectorIndex.batchIvfSearchStore(spark, sfDir)
+    val path = VectorIndex.ensureStore(spark, sfDir)
+    val batch = VectorIndex.batchSearchStore(spark, sfDir, path)
     val plan = batch.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [centroid_id"),
       "the shared scan must prune at the union of all probe sets")
@@ -264,7 +265,6 @@ class StoreSearchSpec extends SparkSpec {
       "the (query, probe) table must broadcast against the pruned scan")
     val got = batch.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val path = VectorIndex.ensureStore(spark, sfDir)
     val expected = (0L until 5L).flatMap { q =>
       val qv = graft.operators.KnnSearch.queryVector(spark, sfDir, q)
       VectorIndex.searchStore(spark, path, qv, k = 5,
@@ -301,15 +301,39 @@ class StoreSearchSpec extends SparkSpec {
   test("annEval's summary equals the hand-joined recall of its two inputs") {
     val exact = graft.operators.KnnSearch.batchTopK(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
-    val approx = VectorIndex.batchIvfSearchStore(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
-    val recalls = exact.map { case (q, es) =>
-      val a = approx.getOrElse(q, Array.empty).map(_._2).toSet
-      es.count(e => a.contains(e._2)).toDouble / 5.0
-    }.toSeq
-    val r = VectorIndex.annEval(spark, sfDir).collect().head
-    assert(r.getLong(0) == recalls.size)
-    assert(math.abs(r.getDouble(2) - recalls.sum / recalls.size) < 1e-9)
-    assert(math.abs(r.getDouble(3) - recalls.min) < 1e-9)
+    // every index family: its graded eval query and its batch probe
+    val families = Seq(
+      "ann_eval" -> VectorIndex.batchSearchStore(spark, sfDir,
+        VectorIndex.ensureStore(spark, sfDir)),
+      "ann_eval_lsh" -> VectorIndex.batchSearchStore(spark, sfDir,
+        VectorIndex.ensureLshStore(spark, sfDir), nprobe = 2),
+      "ann_eval_pq" -> VectorIndex.batchPqSearch(spark, sfDir),
+      "ann_eval_ivf_pq" -> VectorIndex.batchIvfPqSearchStore(spark, sfDir))
+    for ((query, probe) <- families) {
+      val approx = probe
+        .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
+      val recalls = exact.map { case (q, es) =>
+        val a = approx.getOrElse(q, Array.empty).map(_._2).toSet
+        es.count(e => a.contains(e._2)).toDouble / 5.0
+      }.toSeq
+      val r = SparkEntry.queries(query)(spark, sfDir).collect().head
+      assert(r.getLong(0) == recalls.size, query)
+      assert(math.abs(r.getDouble(2) - recalls.sum / recalls.size) < 1e-9,
+        query)
+      assert(math.abs(r.getDouble(3) - recalls.min) < 1e-9, query)
+    }
+  }
+
+  test("a path with no model dir is rejected with a message naming the path") {
+    val path = Files.createTempDirectory("not_a_store").toString
+    val qv = KnnSearch.queryVector(spark, sfDir, 0L)
+    val e = intercept[IllegalArgumentException](
+      VectorIndex.searchStore(spark, path, qv))
+    assert(e.getMessage.contains(path), e.getMessage)
+    // a writer is rejected the same way and writes nothing
+    val w = intercept[IllegalArgumentException](
+      VectorIndex.deleteFromStore(spark, path, Seq(1L), gen = 1L))
+    assert(w.getMessage.contains(path), w.getMessage)
+    assert(new java.io.File(path).list().isEmpty)
   }
 }

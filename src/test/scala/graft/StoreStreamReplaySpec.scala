@@ -48,11 +48,11 @@ class StoreStreamReplaySpec extends SparkSpec {
     VectorIndex.writeLshStore(spark, sfDir, store)
     val batch = vecBatch(4200000L)
     StoreStream.ingestVecBatch(spark, store, batch, gen = 5L,
-      VectorIndex.appendLshStore(_, store, _, _))
+      VectorIndex.appendStore(_, store, _, _))
     val afterFirst = deltaRows(store)
     assert(afterFirst.nonEmpty && afterFirst.forall(_._2 == 5L))
     StoreStream.ingestVecBatch(spark, store, batch, gen = 5L,
-      VectorIndex.appendLshStore(_, store, _, _))
+      VectorIndex.appendStore(_, store, _, _))
     assert(deltaRows(store) == afterFirst,
       "replayed LSH vec micro-batch duplicated delta rows")
   }
